@@ -104,7 +104,7 @@ HEADLINE = [
     # partitioned public write → partition-pruned point lookup) — the
     # composed pipeline priced on the clock, not just its operator
     # queries (VERDICT r5 item 6; plan assertion in
-    # tests/test_pipeline.py::test_write_path_adds_only_the_range_exchange)
+    # tests/test_pipeline.py::test_write_path_adds_no_exchange)
     "produce_pipeline_e2e",
     # round-7: connected-components stress family — diameter (path) and
     # hot-key (star) twins priced against the uniform graph, pinning

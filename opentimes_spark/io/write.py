@@ -10,6 +10,11 @@ orders them, and the parquet writer then emits tight, non-overlapping
 row-group min/max stats — which is exactly what makes the point-lookup
 path (SURVEY.md §3.3) skip row groups. At 100 TB this is the difference
 between a point query touching one row group and touching every file.
+
+A frame whose partitions are already key ranges needs only the
+in-partition sort: the public times write (``plans.pipeline.
+write_public``) sorts the matrix partitions, which are origin ranges
+from routing, and calls the sink without ``order_by`` — no exchange.
 """
 
 from __future__ import annotations
@@ -53,10 +58,13 @@ def write_sorted_partitioned(
     bloom_filter_cols: list[str] | None = None,
     bloom_filter_ndv: int = 100_000,
 ) -> None:
-    """Write ``df`` Hive-partitioned, range-sorted on ``order_by``.
+    """Write ``df`` Hive-partitioned; with ``order_by``, range-partitioned
+    and sorted on it first (``sorted_layout``).
 
     - ``partition_by``: Hive partition keys (directory layout; pruning).
-    - ``order_by``: in-file sort keys → tight row-group zone maps.
+    - ``order_by``: in-file sort keys → tight row-group zone maps; None
+      writes ``df``'s partitions as they are (a caller that already
+      sorted key-range partitions).
     - ``max_records_per_file``: caps file size (reference targets ≤475 MB
       per file via FILE_SIZE_BYTES, create_public_files.py:95).
     - ``observation``: optional ``pyspark.sql.Observation`` given a

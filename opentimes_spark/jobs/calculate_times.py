@@ -3,11 +3,13 @@ in SURVEY.md §3.1).
 
 The reference's ladder — arg parsing → path IR → load → chunk → snap →
 thread-pooled OSRM tiles → concat → write, fanned out by a CI job
-matrix — collapses to ONE Spark job: the chunk grid is the cross
-product's partitioning, the thread pool is the executor pool, the CI
-matrix is the cluster. Chunk subsetting (``--chunk o0-o1_d0-d1``)
-survives as an optional row-range filter so a single invocation can
-still reproduce any one reference job's slice.
+matrix — collapses into one Spark application: the chunk grid is the
+range partitioning of the origins, the thread pool is the executor
+pool, the CI matrix is the cluster. Each O×D tile is routed once; the
+routed matrix is materialized and both ``times`` and ``missing_pairs``
+are written from it without a shuffle. Chunk subsetting
+(``--chunk o0-o1_d0-d1``) survives as an optional row-range filter so a
+single invocation can still reproduce any one reference job's slice.
 
 Usage (demo world, local):
 
@@ -25,6 +27,7 @@ import argparse
 import json
 import os
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -136,7 +139,7 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
         origins = _slice_ids(origins, o0, o1)
         destinations = _slice_ids(destinations, d0, d1)
 
-    times, missing, metadata = compute_times(
+    times, missing = compute_times(
         origins,
         destinations,
         HaversineRouter,
@@ -149,7 +152,7 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
         centroid_type=args.centroid_type,
     )
     # observe() folds the summary counts into the write jobs themselves —
-    # no second pass over the (expensive) matrix lineage for metadata,
+    # no second pass over the matrix or the point lineages for metadata,
     # the at-scale replacement for the reference's separate count
     # queries (calculate_times.py:107-133)
     from pyspark.sql import Observation
@@ -162,30 +165,40 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     from opentimes_spark.plans.pipeline import od_cols
 
     lon, lat = od_cols(args.centroid_type)
-    # the points writes scan origins/destinations anyway — ride their
-    # counts on Observations instead of re-executing the (expensive)
-    # cenloc/destpoint lineages with .count(), per this file's own
-    # no-second-pass rule
-    missing_obs = Observation("missing_metrics")
-    origin_obs = Observation("origin_metrics")
-    dest_obs = Observation("dest_metrics")
-    for name, df, obs in (
-        ("points/origin", origins.select(
-            F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")), origin_obs),
-        ("points/destination", destinations.select(
-            F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")), dest_obs),
-        ("missing_pairs", missing, missing_obs),
-        ("metadata", metadata, None),
+
+    def points(df: DataFrame) -> DataFrame:
+        # dimension-sized (a state's units; destinations are capped by
+        # max_broadcast_destinations): one file, since every extra
+        # zstd-12 file costs fixed writer set-up
+        return df.select(
+            F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")
+        ).coalesce(1)
+
+    counts = {}
+    for name, df in (
+        ("points/origin", points(origins)),
+        ("points/destination", points(destinations)),
+        ("missing_pairs", missing),
     ):
+        obs = Observation(name.replace("/", "_") + "_metrics")
         write_sorted_partitioned(df, os.path.join(args.out, name), observation=obs)
-    summary = {
+        counts[name] = obs.get["n"]
+    # metadata is one row built from the counts the points writes
+    # observed, as JVM literals: a createDataFrame of a Python list
+    # starts a Python worker per task and cost ~3x this write
+    metadata = spark.range(1, numPartitions=1).select(
+        F.lit(uuid.uuid4().hex[:8]).alias("run_id"),
+        F.lit(counts["points/origin"]).cast("long").alias("calc_n_origins"),
+        F.lit(counts["points/destination"]).cast("long").alias("calc_n_destinations"),
+    )
+    write_sorted_partitioned(metadata, os.path.join(args.out, "metadata"))
+    return {
         "n_times": times_obs.get["n"],
-        "n_missing": missing_obs.get["n"],
-        "n_origins": origin_obs.get["n"],
-        "n_destinations": dest_obs.get["n"],
+        "n_missing": counts["missing_pairs"],
+        "n_origins": counts["points/origin"],
+        "n_destinations": counts["points/destination"],
         "out": args.out,
     }
-    return summary
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -21,8 +21,10 @@ broadcast. The reference's CI matrix × thread pool collapses into Spark
 tasks; its chunk files become partitions. Routing is pluggable via a
 serializable factory so executors construct their own client (HTTP
 session per partition for a real OSRM sidecar; a pure-math mock here).
-At 1000 executors this is embarrassingly parallel: no shuffle at all
-until the sorted write.
+At 1000 executors this is embarrassingly parallel: the one exchange is
+the range partitioning of the (dimension-sized) origins before routing;
+the routed matrix itself is never shuffled — each of its partitions is
+an origin range, which the public write only sorts within.
 """
 
 from __future__ import annotations

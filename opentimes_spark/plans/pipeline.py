@@ -14,23 +14,23 @@ Stage parity map:
   join :87-91 is spatial_join_contains)
 - build_destpoint ⇝ create_destpoint.py (destinations within the
   buffered state)
-- compute_times   ⇝ calculate_times.py (X3 matrix + times/missing split
-  + metadata)
-- write_public    ⇝ create_public_files.py (partitioned, range-sorted,
-  size-capped layout)
+- compute_times   ⇝ calculate_times.py (X3 matrix routed once over
+  origin ranges + times/missing split)
+- write_public    ⇝ create_public_files.py (partitioned, origin-sorted,
+  size-capped layout; no shuffle — the matrix partitions are already
+  origin ranges)
 - point_lookup    ⇝ the browser/DuckDB consume path (README.md:88-98,
   site/assets/js/map.js §3.3)
 """
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from opentimes_spark.functions.geoid import split_geoid
 from opentimes_spark.io.write import write_sorted_partitioned
+from opentimes_spark.materialize import mz_proxy
 from opentimes_spark.operators.matrix import split_times_missing, travel_time_matrix
 from opentimes_spark.operators.spatial import project_points
 from opentimes_spark.operators.weighted_mean import weighted_centroids
@@ -371,9 +371,19 @@ def compute_times(
     centroid_type: str = "weighted",
     max_split_size: int = 5000,
     num_chunks: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """X3 over centroid points → (times, missing_pairs, metadata).
-    Column choice by centroid type mirrors OD_COLS (utils/times.py:310-313)."""
+) -> tuple[DataFrame, DataFrame]:
+    """X3 over centroid points → (times, missing_pairs), from ONE
+    routing pass.  Column choice by centroid type mirrors OD_COLS
+    (utils/times.py:310-313).
+
+    The origins are range-partitioned on id into ``num_chunks`` tasks
+    (default: the context's ``defaultParallelism``) BEFORE routing, so
+    every matrix partition is one origin range and the public write
+    needs no exchange of its own.  The matrix is materialized once
+    (``mz_proxy``: fact row count, 3 columns), so ``times`` and
+    ``missing_pairs`` read the same routed cells — each O×D pair lands
+    in exactly one of them even when the router's answer can differ
+    between calls, and no tile is routed twice."""
     lon, lat = od_cols(centroid_type)
     o = origins_cenloc.select(
         F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")
@@ -381,26 +391,11 @@ def compute_times(
     d = destinations.select(
         F.col("geoid").alias("id"), F.col(lon).alias("lon"), F.col(lat).alias("lat")
     )
+    num_chunks = num_chunks or o.sparkSession.sparkContext.defaultParallelism
     matrix = travel_time_matrix(
         o, d, router_factory, max_split_size=max_split_size, num_chunks=num_chunks
-    )
-    times, missing = split_times_missing(matrix)
-    # Metadata stays LAZY: eager o.count()/d.count() here would each
-    # re-execute the full blockloc→cenloc lineage (a Python-worker PIP
-    # join) before the caller has even asked for the matrix — two extra
-    # end-to-end passes that at national scale re-read the whole block
-    # set.  A crossJoin of two 1-row aggregates carries the same counts
-    # and only runs if/when the caller materializes the metadata frame.
-    metadata = (
-        o.agg(F.count(F.lit(1)).alias("calc_n_origins"))
-        .crossJoin(d.agg(F.count(F.lit(1)).alias("calc_n_destinations")))
-        .select(
-            F.lit(uuid.uuid4().hex[:8]).alias("run_id"),
-            F.col("calc_n_origins"),
-            F.col("calc_n_destinations"),
-        )
-    )
-    return times, missing, metadata
+    ).transform(mz_proxy)
+    return split_times_missing(matrix)
 
 
 def write_public(
@@ -416,24 +411,25 @@ def write_public(
     observation=None,
 ) -> None:
     """Partitioned public write with the T4 sorted layout: Hive keys as
-    STRINGS (reference hive_types_autocast=false) + range-sorted
-    (origin_id, destination_id) for tight row-group stats."""
-    tagged = (
-        times.withColumn("version", F.lit(version))
-        .withColumn("mode", F.lit(mode))
-        .withColumn("year", F.lit(year))
-        .withColumn("geography", F.lit(geography))
-        .withColumn("state", F.lit(state))
-        .withColumn("centroid_type", F.lit(centroid_type))
+    STRINGS (reference hive_types_autocast=false) + each partition
+    sorted on (origin_id, destination_id) for tight row-group stats.
+    No exchange: ``compute_times`` range-partitions the origins before
+    routing, so each matrix partition is already an origin range and
+    row groups cannot overlap across files."""
+    keys = dict(
+        version=version, mode=mode, year=year, geography=geography,
+        state=state, centroid_type=centroid_type,
     )
+    laid_out = times.select(
+        "*", *(F.lit(keys[k]).alias(k) for k in PARTITION_KEYS)
+    ).sortWithinPartitions("origin_id", "destination_id")
     # zone maps cover origin_id (the sort key); the bloom filter covers
     # destination-keyed point lookups, whose values span every row
     # group's min/max range in an origin-sorted file
     write_sorted_partitioned(
-        tagged,
+        laid_out,
         out_dir,
         partition_by=PARTITION_KEYS,
-        order_by=["origin_id", "destination_id"],
         max_records_per_file=max_records_per_file,
         observation=observation,
         bloom_filter_cols=["destination_id"],

@@ -23,6 +23,20 @@ def test_cli_demo_end_to_end(spark, tmp_path):
     for ds in ("times", "points/origin", "points/destination",
                "missing_pairs", "metadata"):
         assert os.path.isdir(os.path.join(out, ds)), ds
+    # metadata is one row whose counts match the points tables it was
+    # built from; each points table is dimension-sized and one file
+    points = {
+        kind: spark.read.parquet(os.path.join(out, "points", kind))
+        for kind in ("origin", "destination")
+    }
+    md = spark.read.parquet(os.path.join(out, "metadata")).collect()
+    assert len(md) == 1 and len(md[0]["run_id"]) == 8
+    assert md[0]["calc_n_origins"] == points["origin"].count() == summary["n_origins"]
+    assert md[0]["calc_n_destinations"] == points["destination"].count() == (
+        summary["n_destinations"]
+    )
+    for kind, df in points.items():
+        assert len(df.inputFiles()) == 1, kind
     # Hive layout carries all six partition keys
     state_dir = os.path.join(
         out, "times", "version=0.0.1", "mode=car", "year=2024",

@@ -1,7 +1,9 @@
 """Classify every query-path materialization site as grid vs proxy
 (round 16, VERDICT r15 item 3).
 
-Scans ``opentimes_spark/plans/queries.py`` (and the shared helpers) for
+Scans ``opentimes_spark/plans/queries.py`` (and the shared helpers and
+the produce pipeline, whose routed O×D matrix is a ``proxy`` site: fact
+row count, 3 columns) for
 ``.transform(mz_grid)`` / ``.transform(mz_proxy)`` sites, prints one
 table row per site (enclosing query, line, class, grouping keys), and
 cross-checks the committed class against the same heuristics that
@@ -35,6 +37,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FILES = [
     "opentimes_spark/plans/queries.py",
     "opentimes_spark/functions/text.py",
+    "opentimes_spark/plans/pipeline.py",
 ]
 
 # entity-grain key fragments: cardinality grows with the fact tables
