@@ -101,7 +101,7 @@ HEADLINE = [
     "orders_mad_outliers",
     # round-6: the flagship OD produce path END-TO-END (world →
     # blockloc → cenloc → destpoint → travel matrix → sorted
-    # partitioned public write → partition-pruned point lookup) — the
+    # partitioned public write → one-partition point lookup) — the
     # composed pipeline priced on the clock, not just its operator
     # queries (VERDICT r5 item 6; plan assertion in
     # tests/test_pipeline.py::test_write_path_adds_no_exchange)
@@ -161,9 +161,9 @@ HEADLINE = [
     "curate_pipeline_e2e",
     # round-11: §3.3 priced on the clock — the reference's one
     # published latency ("a few seconds" for the map point lookup,
-    # README.md:136-138) vs this engine's partition-pruned 3-column
-    # read of produce_pipeline_e2e's public write (pruning plan
-    # asserted in tests/test_pipeline.py)
+    # README.md:136-138) vs this engine's one-partition 3-column
+    # read of produce_pipeline_e2e's public write (scan asserted in
+    # tests/test_plans.py and tests/test_lookup.py)
     "point_lookup",
     # round-11 shape representatives: the at-scale Poisson bootstrap
     # (B=100 coin weights -> ONE map-side-combined aggregate; xxhash64

@@ -20,22 +20,35 @@ Stage parity map:
   size-capped layout; no shuffle — the matrix partitions are already
   origin ranges)
 - point_lookup    ⇝ the browser/DuckDB consume path (README.md:88-98,
-  site/assets/js/map.js §3.3)
+  site/assets/js/map.js §3.3): path-addressed, schema-pinned read of
+  one partition (destination_lookup is its reverse)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from opentimes_spark.functions.geoid import split_geoid
 from opentimes_spark.io.write import write_sorted_partitioned
 from opentimes_spark.materialize import mz_proxy
-from opentimes_spark.operators.matrix import split_times_missing, travel_time_matrix
+from opentimes_spark.operators.matrix import (
+    TIMES_SCHEMA,
+    split_times_missing,
+    travel_time_matrix,
+)
 from opentimes_spark.operators.spatial import project_points
 from opentimes_spark.operators.weighted_mean import weighted_centroids
 
 PARTITION_KEYS = ["version", "mode", "year", "geography", "state", "centroid_type"]
+# the public times table as a lookup reads it: the matrix columns plus
+# the Hive keys as strings (write_public; reference
+# hive_types_autocast=false), all nullable as every file read is
+_PUBLIC_SCHEMA = StructType(
+    [StructField(f.name, f.dataType) for f in TIMES_SCHEMA.fields]
+    + [StructField(k, StringType()) for k in PARTITION_KEYS]
+)
 
 
 def build_blockloc(
@@ -436,6 +449,33 @@ def write_public(
     )
 
 
+def _lookup(spark, public_dir: str, id_col: str, id_value: str, keys: dict) -> DataFrame:
+    """Read the one Hive partition ``keys`` names, by path and with the
+    schema pinned, and keep the rows whose ``id_col`` is ``id_value``.
+    Spark lists that directory alone and runs no schema-inference job;
+    the keys are strings in ``_PUBLIC_SCHEMA``, so the result does not
+    depend on the session's partition-type inference.  A partition that
+    was never written reads as an empty frame.  The existence check
+    goes through the path's Hadoop ``FileSystem``, so it holds on
+    ``s3a://`` too."""
+    jvm = spark._jvm
+    # partitionBy escapes the values in directory names; address them alike
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    partition_dir = "/".join(
+        [public_dir.rstrip("/")] + [f"{k}={escape(keys[k])}" for k in PARTITION_KEYS]
+    )
+    path = jvm.org.apache.hadoop.fs.Path(partition_dir)
+    if path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        df = (
+            spark.read.schema(_PUBLIC_SCHEMA)
+            .option("basePath", public_dir)
+            .parquet(partition_dir)
+        )
+    else:
+        df = spark.createDataFrame([], _PUBLIC_SCHEMA)
+    return df.filter(F.col(id_col) == id_value).select(*TIMES_SCHEMA.fieldNames())
+
+
 def point_lookup(
     spark,
     public_dir: str,
@@ -447,21 +487,15 @@ def point_lookup(
     state: str = "17",
     centroid_type: str = "weighted",
 ) -> DataFrame:
-    """The consume path (§3.3): all partition keys + origin →
-    partition-pruned, row-group-skipping scan of 3 columns."""
-    df = spark.read.parquet(public_dir)
-    return (
-        df.filter(
-            (F.col("version") == version)
-            & (F.col("mode") == mode)
-            & (F.col("year") == year)
-            & (F.col("geography") == geography)
-            & (F.col("state") == state)
-            & (F.col("centroid_type") == centroid_type)
-            & (F.col("origin_id") == origin_id)
-        )
-        .select("origin_id", "destination_id", "duration_sec")
+    """The consume path (§3.3): all partition keys + origin → a
+    path-addressed, schema-pinned read of that one partition; the
+    origin equality reaches the parquet reader, which skips the row
+    groups whose origin_id zone map excludes it.  3 columns out."""
+    keys = dict(
+        version=version, mode=mode, year=year, geography=geography,
+        state=state, centroid_type=centroid_type,
     )
+    return _lookup(spark, public_dir, "origin_id", origin_id, keys)
 
 
 def destination_lookup(
@@ -475,7 +509,8 @@ def destination_lookup(
     state: str = "17",
     centroid_type: str = "weighted",
 ) -> DataFrame:
-    """The REVERSE consume path: all times INTO a destination.  The
+    """The REVERSE consume path: all times INTO a destination, by the
+    same path-addressed, schema-pinned read of one partition.  The
     file layout is origin-sorted, so destination values span every row
     group's min/max and zone maps cannot skip — this is exactly what
     the destination_id parquet BLOOM FILTER (write_public) exists for:
@@ -483,16 +518,8 @@ def destination_lookup(
     drops a row group without touching its data pages.  (The Z-order
     layout in functions/zorder.py is the alternative when BOTH axes
     need zone-map pruning.)"""
-    df = spark.read.parquet(public_dir)
-    return (
-        df.filter(
-            (F.col("version") == version)
-            & (F.col("mode") == mode)
-            & (F.col("year") == year)
-            & (F.col("geography") == geography)
-            & (F.col("state") == state)
-            & (F.col("centroid_type") == centroid_type)
-            & (F.col("destination_id") == destination_id)
-        )
-        .select("origin_id", "destination_id", "duration_sec")
+    keys = dict(
+        version=version, mode=mode, year=year, geography=geography,
+        state=state, centroid_type=centroid_type,
     )
+    return _lookup(spark, public_dir, "destination_id", destination_id, keys)

@@ -329,3 +329,56 @@ def test_boilerplate_coverage_join_strategy_control(spark):
         boilerplate_coverage(docs, n=3, min_df=5, broadcast_templates=False)
     )
     assert "ShuffledHashJoin" in shuffled or "SortMergeJoin" in shuffled
+
+
+def _write_documents(path: str, seed: int, n_dups: int) -> None:
+    """A small documents table: 40 random texts over a 12-word vocabulary
+    in two languages, plus ``n_dups`` near-duplicates (one word changed)
+    of the first texts."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    vocab = "the fast slow spark join sort merge scan part key row table".split()
+    texts = [" ".join(rng.choices(vocab, k=rng.randint(8, 20))) for _ in range(40)]
+    texts += [t.rsplit(" ", 1)[0] + " window" for t in texts[:n_dups]]
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": texts,
+            "lang": [("en", "es")[i % 2] for i in range(len(texts))],
+            "source": ["src0"] * len(texts),
+            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+        }),
+        path,
+    )
+
+
+def test_threshold_sweep_sees_a_corpus_rewritten_at_the_same_path(spark, tmp_path):
+    """The sweep's materialized intermediates must not outlive the call:
+    a plan-matched cache would answer the second call, on a corpus
+    rewritten at the same path, with the first corpus's counts."""
+    import duckdb
+
+    from opentimes_spark.plans.queries import ORACLE_SQL, QUERIES
+
+    name = "docs_dedup_threshold_sweep"
+    path = str(tmp_path / "documents.parquet")
+
+    def spark_rows():
+        return sorted(tuple(r) for r in QUERIES[name](spark, str(tmp_path)).collect())
+
+    def oracle_rows():
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        return sorted((float(tau), *counts) for tau, *counts in con.execute(ORACLE_SQL[name]).fetchall())
+
+    _write_documents(path, seed=1, n_dups=3)
+    first = oracle_rows()
+    assert spark_rows() == first
+    _write_documents(path, seed=2, n_dups=6)
+    second = oracle_rows()
+    assert second != first
+    assert spark_rows() == second

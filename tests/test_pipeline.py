@@ -275,10 +275,11 @@ def test_write_path_adds_no_exchange(spark, world, monkeypatch):
 
 def test_destination_lookup_reverse_path(spark, world, tmp_path):
     """The reverse consume path returns exactly the destination's row
-    set, partition-pruned on the Hive keys with the destination
-    equality pushed to the parquet reader (where the bloom filter
-    written by write_public applies)."""
+    set from a scan rooted at the one partition directory, with the
+    destination equality pushed to the parquet reader (where the bloom
+    filter written by write_public applies)."""
     from opentimes_spark.plans.pipeline import destination_lookup
+    from tests.conftest import assert_one_partition_scan, partition_dir
 
     blocks_df, pop_df = world
     blockloc = build_blockloc(blocks_df, pop_df, check=False)
@@ -296,8 +297,4 @@ def test_destination_lookup_reverse_path(spark, world, tmp_path):
     got = destination_lookup(spark, out, some_dest)
     expect = times.filter(F.col("destination_id") == some_dest)
     assert got.count() == expect.count() > 0
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan
-    assert "destination_id" in plan.split("PushedFilters")[1].split("\n")[0]
+    assert_one_partition_scan(got, partition_dir(out), "destination_id", some_dest)

@@ -93,11 +93,13 @@ def test_ivf_probe_prunes_corpus_join(spark):
 
 
 def test_point_lookup_prunes_partitions(spark, tmp_path):
-    """§3.3 consume path: with all partition keys bound, the scan must
-    show PartitionFilters on the Hive keys and push the origin_id
-    predicate into the parquet reader — at 100 TB this is what makes the
-    lookup touch one directory and ~one row group."""
+    """§3.3 consume path: with all partition keys bound, the scan is
+    rooted at that one partition directory and reads only files under
+    it, and the origin_id equality is pushed into the parquet reader —
+    at 100 TB this is what makes the lookup list one directory and
+    touch ~one row group."""
     from opentimes_spark.plans.pipeline import point_lookup, write_public
+    from tests.conftest import assert_one_partition_scan, partition_dir
 
     times = spark.createDataFrame(
         [(f"17031{i:06d}", f"18097{j:06d}", float(60 * (i + j)))
@@ -106,14 +108,11 @@ def test_point_lookup_prunes_partitions(spark, tmp_path):
     )
     out = str(tmp_path / "times_pub")
     write_public(times, out)
-    p = plan(point_lookup(spark, out, "17031000001"))
-    assert "PartitionFilters" in p
-    for key in ("version", "mode", "state", "centroid_type"):
-        assert key in p
-    assert "PushedFilters" in p and "origin_id" in p
-    # only the 3 projected columns reach the read schema
-    read_schema = [ln for ln in p.splitlines() if "ReadSchema" in ln][0]
-    assert "duration_sec" in read_schema
+    df = point_lookup(spark, out, "17031000001")
+    assert_one_partition_scan(df, partition_dir(out), "origin_id", "17031000001")
+    assert sorted(r["destination_id"] for r in df.collect()) == [
+        f"18097{j:06d}" for j in range(5)
+    ]
 
 
 def test_lsh_band_join_runtime_reused_exchange(spark):

@@ -1,7 +1,9 @@
 """The produce path routes every O×D tile once: ``times`` and
 ``missing_pairs`` come from one routing pass, so a router whose answer
 can change between calls still puts each pair in exactly one of them
-(ROADMAP correctness invariant; reference calculate_times.py:71-79)."""
+(ROADMAP correctness invariant; reference calculate_times.py:71-79).
+Every test runs under each materialization strategy of the routed matrix,
+a ``proxy`` site (materialize.py)."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import os
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import functions as F
 
@@ -23,6 +26,18 @@ from opentimes_spark.plans.pipeline import (
     compute_times,
     write_public,
 )
+
+
+@pytest.fixture(autouse=True, params=["local", "persist", "checkpoint"])
+def proxy_strategy(request, spark, tmp_path, monkeypatch):
+    """``materialize._strategy`` reads the variable at call time."""
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_PROXY", request.param)
+    if request.param == "checkpoint":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "checkpoints"))
+    yield request.param
+    if request.param == "persist":
+        # the persisted matrix is never unpersisted; keep it out of later tests
+        spark.catalog.clearCache()
 
 
 def _counting_router(spark):
